@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from varint_simd_spark.operators import decode_table
 from varint_simd_spark.plans.partitioning import (
     encode_table_salted,
+    host_of,
     plan_salts,
     salted_chunk_column,
     skew_report,
@@ -52,6 +53,70 @@ def test_salted_roundtrip(web_pages, spark):
     src = web_pages.toPandas().sort_values("url", ignore_index=True)
     assert (out["text"] == src["text"]).all()
     assert (out["url"] == src["url"]).all()
+
+
+def _assert_one_file_per_chunk_dir(enc_path):
+    import pathlib
+
+    dirs = list(pathlib.Path(enc_path).glob("chunk_id=*"))
+    assert dirs
+    for d in dirs:
+        assert len(list(d.glob("*.parquet"))) == 1, d
+
+
+def _lineage(m):
+    return {
+        r["chunk_id"]: (r["n_values"], r["raw_bytes"], r["enc_bytes"], r["n_columns"])
+        for r in m.collect()
+    }
+
+
+def _native_lineage(written):
+    return _lineage(written.groupBy("chunk_id").agg(
+        F.sum("n_values").alias("n_values"),
+        F.sum("raw_bytes").alias("raw_bytes"),
+        F.sum("enc_bytes").alias("enc_bytes"),
+        F.count("*").alias("n_columns"),
+    ))
+
+
+MANIFEST_DTYPES = [
+    ("chunk_id", "bigint"), ("n_values", "bigint"), ("raw_bytes", "bigint"),
+    ("enc_bytes", "bigint"), ("n_columns", "bigint"), ("snapshot_id", "string"),
+    ("committed_at", "double"),
+]
+
+
+def test_first_commit_matches_salted_encode(web_pages, spark, tmp_path):
+    """A first salted encode_resumable into an empty store writes exactly
+    the rows encode_table_salted produces, one data file per chunk
+    directory, and manifest rows equal to a native rollup of the written
+    store plus zero rows for planned chunks that got no rows."""
+    n_chunks = 32
+    # four hosts (one hot, salted over several chunks): most of the 32
+    # planned chunks get no rows
+    src = web_pages.filter(host_of("url").rlike(r"^https://host[0-3]\.example"))
+    store = EncodedStore(spark, str(tmp_path / "first"))
+    snap, n = encode_resumable(store, src, key="url", n_chunks=n_chunks,
+                               salted=True, target_rows_per_chunk=200)
+    assert snap is not None and n == n_chunks
+
+    cols = ["chunk_id", "column", "codec", "payload", "crc32"]
+    written = spark.read.parquet(store.enc_path)
+    exp = encode_table_salted(src, n_chunks=n_chunks, target_rows_per_chunk=200)
+    got_rows = sorted(tuple(r) for r in written.select(*cols).collect())
+    assert got_rows == sorted(tuple(r) for r in exp.select(*cols).collect())
+    _assert_one_file_per_chunk_dir(store.enc_path)
+
+    m = store.manifest()
+    assert m.dtypes == MANIFEST_DTYPES
+    assert m.count() == n_chunks
+    assert {r["snapshot_id"] for r in m.collect()} == {snap}
+    native = _native_lineage(written)
+    assert 0 < len(native) < n_chunks  # some planned chunks stayed empty
+    want = {c: (0, 0, 0, 0) for c in range(n_chunks)}
+    want.update(native)
+    assert _lineage(m) == want
 
 
 def test_resume_idempotent(web_pages, spark, tmp_path):
@@ -284,3 +349,8 @@ def test_ingest_to_store_roundtrip(web_pages, spark, tmp_path):
     m = store.manifest().toPandas()
     n_chunks = store.read_encoded().select("chunk_id").distinct().count()
     assert len(m) == n_chunks and m["chunk_id"].is_unique
+
+    # one data file per chunk directory; lineage == native rollup
+    _assert_one_file_per_chunk_dir(store.enc_path)
+    assert store.manifest().dtypes == MANIFEST_DTYPES
+    assert _lineage(store.manifest()) == _native_lineage(spark.read.parquet(store.enc_path))

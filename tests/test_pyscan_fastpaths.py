@@ -163,3 +163,73 @@ def test_encode_table_remap_preserves_chunk_ids(spark):
         for r in df.select(F.pmod(F.xxhash64("doc_id"), F.lit(8))).distinct().collect()
     )
     assert got == exp
+
+
+def test_chunk_key_remap_is_memoized():
+    from varint_simd_spark.operators.encode import _chunk_key_remap
+
+    fresh = _chunk_key_remap.__wrapped__(24, 10)
+    assert _chunk_key_remap(24, 10) == fresh
+    hits = _chunk_key_remap.cache_info().hits
+    assert _chunk_key_remap(24, 10) is _chunk_key_remap(24, 10)
+    assert _chunk_key_remap.cache_info().hits == hits + 2
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_agg_decode_single_dir_store_takes_jvm_scan(spark, tmp_path):
+    """A store whose files share one directory must not serialize into one
+    pyscan task: the aggregate takes the JVM scan (no Range -> MapInArrow
+    carrier) and returns the rows the VSS_PYSCAN=0 path returns."""
+    from varint_simd_spark.operators import encode_table
+    from varint_simd_spark.operators.encode import decode_aggregate
+    from varint_simd_spark.sources.web_pages import generate_web_pages
+
+    enc = encode_table(generate_web_pages(spark, 1500, seed=5), key="url", n_chunks=8)
+    enc.repartition(4).write.parquet(str(tmp_path / "flat"))
+    enc.write.partitionBy("chunk_id").parquet(str(tmp_path / "dirs"))
+    flat = spark.read.parquet(str(tmp_path / "flat"))
+    agg = decode_aggregate(flat, use_stats=False)
+    assert "Range" not in _plan(agg)
+    got = _rows(agg)
+    os.environ["VSS_PYSCAN"] = "0"
+    try:
+        assert _rows(decode_aggregate(flat, use_stats=False)) == got and got
+    finally:
+        os.environ["VSS_PYSCAN"] = "1"
+    # a chunk-partitioned store keeps the pyscan carrier
+    dirs = spark.read.parquet(str(tmp_path / "dirs"))
+    assert "Range" in _plan(decode_aggregate(dirs, use_stats=False))
+
+
+@pytest.mark.parametrize("key", ["doc_id", "skey"])
+def test_bucketed_pyscan_matches_jvm_buckets(spark, tmp_path, key):
+    """Bucketed encode through the python scan (numpy XXH64 buckets) must
+    give the same bucket membership and payloads as the JVM scan
+    (Spark's xxhash64), for an int64 key and a string key with nulls."""
+    from varint_simd_spark.operators import encode_table_bucketed
+
+    src_path = str(tmp_path / "in")
+    spark.range(3000).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") % 17 == 0, None)
+        .otherwise(F.concat(F.lit("k"), F.col("id").cast("string"))).alias("skey"),
+        F.concat(F.lit("body "), (F.col("id") * 7 % 101).cast("string")).alias("text"),
+        (F.col("id") % 5).alias("lang_id"),
+    ).coalesce(1).write.parquet(src_path)
+    src = spark.read.parquet(src_path)
+    rows = {}
+    for mode in ("0", "1"):
+        os.environ["VSS_PYSCAN"] = mode
+        try:
+            enc = encode_table_bucketed(src, key=key, n_buckets=8)
+            assert ("Range" in _plan(enc)) == (mode == "1")
+            rows[mode] = sorted(
+                tuple(r) for r in enc.select("column", "n_values", "bucket", "crc32").collect()
+            )
+        finally:
+            os.environ["VSS_PYSCAN"] = "1"
+    assert rows["0"] == rows["1"]
+    assert len({r[2] for r in rows["1"]}) == 8

@@ -192,26 +192,6 @@ def dtype_tag(s: pd.Series) -> str:
     return arrow_tag(pa.Array.from_pandas(s).type)
 
 
-def to_int64(s: pd.Series, tag: str) -> np.ndarray:
-    arr = pa.Array.from_pandas(s)
-    if arr.null_count:
-        arr = pc.fill_null(arr, 0)
-    return arrow_to_int64(arr, tag)
-
-
-def to_bytes_list(s: pd.Series, tag: str) -> list[bytes]:
-    from .strings import bo_to_list
-
-    typ = pa.large_binary() if tag == "bin" else pa.large_string()
-    arr = pa.Array.from_pandas(s, type=typ)
-    if arr.null_count:
-        arr = pc.fill_null(arr, b"" if tag == "bin" else "")
-    bo = arrow_to_bo(arr)
-    if tag == "str":
-        return bo_to_list(bo)
-    return bo_to_list(bo)
-
-
 def encode_column(s: pd.Series, codec: str) -> tuple[str, bytes, dict]:
     arr = pa.Array.from_pandas(s)
     return encode_column_arrow(arr, codec)

@@ -20,6 +20,7 @@ Scale notes (designed for ~100 TB / 1000 executors, tested on local[32]):
 
 from __future__ import annotations
 
+import functools
 import json
 import zlib
 
@@ -43,7 +44,7 @@ from ..codecs.choose import choose_codec_arrow
 from ..codecs.strings import arrow_to_bo
 from ..kernels import varint
 from ..kernels.zigzag import zigzag
-from .pyscan import parquet_scan_info, pyscan_map_in_arrow
+from .pyscan import parquet_scan_info, pyscan_map_in_arrow, too_few_dirs
 
 ENCODED_SCHEMA = T.StructType(
     [
@@ -390,16 +391,21 @@ def _encode_columns_to_rows(
     return pa.table(cols, schema=_ENC_ARROW)
 
 
-def make_encode_chunk_fn(
+def encode_chunks(
+    df: DataFrame,
     columns: list[str],
-    codecs: dict[str, str],
+    codecs: dict[str, str] | None,
     sort_key: str | None,
     stats_group_by: str | None = None,
     chunk_id_map: dict[int, int] | None = None,
-):
-    """Build the applyInArrow chunk encoder (closure shipped to executors).
+) -> DataFrame:
+    """Encode ``df`` grouped by its ``__chunk`` column: one applyInArrow
+    group per chunk, so every row of a chunk is emitted by one task.
+    ``sort_key`` rides along even when not an encoded column (the chunk
+    sort needs it; the encode loop iterates ``columns`` only).
     ``chunk_id_map``: inverse of the anti-collision grouping-key remap —
     maps the shuffled magic key back to the logical chunk id."""
+    codecs = codecs or {}
 
     def encode_chunk(table: pa.Table) -> pa.Table:
         chunk_id = int(table["__chunk"][0].as_py())
@@ -411,7 +417,12 @@ def make_encode_chunk_fn(
             table, columns, codecs, chunk_id, stats_group_by=stats_group_by
         )
 
-    return encode_chunk
+    select_cols = list(columns) + ([sort_key] if sort_key not in (None, *columns) else [])
+    return (
+        df.select(*select_cols, "__chunk")
+        .groupBy("__chunk")
+        .applyInArrow(encode_chunk, schema=ENCODED_SCHEMA)
+    )
 
 
 def _murmur3_long(value: int, seed: int = 42) -> int:
@@ -445,7 +456,8 @@ def _murmur3_long(value: int, seed: int = 42) -> int:
     return h1 - (1 << 32) if h1 >= (1 << 31) else h1
 
 
-def _chunk_key_remap(n_chunks: int, n_partitions: int) -> list[int]:
+@functools.lru_cache(maxsize=64)
+def _chunk_key_remap(n_chunks: int, n_partitions: int) -> tuple[int, ...]:
     """Magic long grouping keys, one per logical chunk id, chosen so
     Spark's hash partitioning spreads the chunks EVENLY over the shuffle
     partitions (chunk i lands in partition i mod n_partitions).
@@ -455,7 +467,8 @@ def _chunk_key_remap(n_chunks: int, n_partitions: int) -> list[int]:
     partitions come up empty and the fullest holds 3-4 chunks, so the
     encode stage runs at a fraction of the cores and its wall time is the
     straggler's.  The remap is planning-time only — the emitted chunk_id
-    is mapped back to the logical id, so outputs are unchanged."""
+    is mapped back to the logical id, so outputs are unchanged.  The search
+    is deterministic, so it is cached per (n_chunks, n_partitions)."""
     magics: list[int] = []
     v = 0
     for i in range(n_chunks):
@@ -469,16 +482,46 @@ def _chunk_key_remap(n_chunks: int, n_partitions: int) -> list[int]:
                 v += 1
                 break
             v += 1
-    return magics
+    return tuple(magics)
 
 
-def _check_stats_group_by(stats_group_by: str | None, columns: list[str]) -> None:
+def _check_encode_args(
+    columns: list[str], codecs: dict | None, stats_group_by: str | None
+) -> None:
+    unknown = set(codecs or {}) - set(columns)
+    if unknown:
+        raise ValueError(f"codecs for unknown columns: {sorted(unknown)}")
     if stats_group_by is not None and stats_group_by not in columns:
         raise ValueError(
             f"stats_group_by column {stats_group_by!r} must be one of the "
             f"encoded columns (grouped aggregation needs it decodable for "
             f"the fallback path)"
         )
+
+
+def _spark_xxh64(karr: pa.Array) -> np.ndarray:
+    """Spark's ``xxhash64(key)`` of an Arrow key column, bit for bit: the
+    numpy XXH64 over utf8/binary bytes or 8-byte LE longs; NULL hashes to
+    the seed."""
+    from ..kernels.xxh64 import xxh64_bytes_bo, xxh64_int64
+
+    nulls = None
+    if karr.null_count:
+        nulls = pc.is_null(karr).to_numpy(zero_copy_only=False)
+        karr = pc.fill_null(
+            karr,
+            "" if pa.types.is_string(karr.type) or pa.types.is_large_string(karr.type)
+            else b"" if pa.types.is_binary(karr.type) or pa.types.is_large_binary(karr.type)
+            else 0,
+        )
+    if pa.types.is_integer(karr.type):
+        h = xxh64_int64(karr.cast(pa.int64()).to_numpy(zero_copy_only=False))
+    else:
+        blob, offs = arrow_to_bo(karr)
+        h = xxh64_bytes_bo(blob, offs)
+    if nulls is not None:
+        h[nulls] = 42  # xxhash64(NULL) = the seed, per Spark
+    return h
 
 
 FRAG_SCHEMA = T.StructType(
@@ -566,7 +609,6 @@ def _encode_table_fragment_merge(
     frag_columns = list(columns) + ([key] if key not in columns else [])
 
     from ..kernels.xxh64 import pmod as _pmod
-    from ..kernels.xxh64 import xxh64_bytes_bo, xxh64_int64
 
     def frag_fn(batches):
         from pyspark import TaskContext
@@ -577,25 +619,7 @@ def _encode_table_fragment_merge(
         if not batches:
             return
         table = pa.Table.from_batches(batches)
-        karr = table[key].combine_chunks()
-        nulls = None
-        if karr.null_count:
-            nulls = pc.is_null(karr).to_numpy(zero_copy_only=False)
-            karr = pc.fill_null(
-                karr,
-                "" if pa.types.is_string(karr.type)
-                or pa.types.is_large_string(karr.type)
-                else b"" if pa.types.is_binary(karr.type)
-                or pa.types.is_large_binary(karr.type)
-                else 0,
-            )
-        if pa.types.is_integer(karr.type):
-            h = xxh64_int64(karr.cast(pa.int64()).to_numpy(zero_copy_only=False))
-        else:
-            blob, offs = arrow_to_bo(karr)
-            h = xxh64_bytes_bo(blob, offs)
-        if nulls is not None:
-            h[nulls] = 42  # xxhash64(NULL) = the seed, per Spark
+        h = _spark_xxh64(table[key].combine_chunks())
         code = _pmod(h, n_chunks)
         order = np.argsort(code, kind="stable")
         table = table.take(pa.array(order))
@@ -675,10 +699,7 @@ def encode_table(
     """
     columns = columns or df.columns
     codecs = codecs or {}
-    unknown = set(codecs) - set(columns)
-    if unknown:
-        raise ValueError(f"codecs for unknown columns: {sorted(unknown)}")
-    _check_stats_group_by(stats_group_by, columns)
+    _check_encode_args(columns, codecs, stats_group_by)
     # fragment-merge fast path: integer-dominated bare parquet scans skip
     # the raw-row shuffle AND the JVM row->Arrow transpose (see
     # _encode_table_fragment_merge).  String-heavy tables stay on the
@@ -721,19 +742,11 @@ def encode_table(
     magics = _chunk_key_remap(n_chunks, max(n_part, 1))
     chunk = F.element_at(
         F.array(*[F.lit(m).cast("long") for m in magics]), (logical + 1).cast("int")
-    ).alias("__chunk")
-    fn = make_encode_chunk_fn(
-        columns, codecs, key if sort_within_chunk else None, stats_group_by,
-        chunk_id_map={m: i for i, m in enumerate(magics)},
     )
-    # the sort key must ride along even when not an encoded column, else the
-    # chunk sort would KeyError at executor time; it is never encoded (the
-    # encode loop iterates `columns` only)
-    select_cols = list(columns) + ([key] if sort_within_chunk and key not in columns else [])
-    return (
-        df.select(*select_cols, chunk)
-        .groupBy("__chunk")
-        .applyInArrow(fn, schema=ENCODED_SCHEMA)
+    return encode_chunks(
+        df.withColumn("__chunk", chunk), columns, codecs,
+        key if sort_within_chunk else None, stats_group_by,
+        chunk_id_map={m: i for i, m in enumerate(magics)},
     )
 
 
@@ -771,10 +784,7 @@ def encode_table_per_split(
 
     columns = columns or df.columns
     codecs = codecs or {}
-    unknown = set(codecs) - set(columns)
-    if unknown:
-        raise ValueError(f"codecs for unknown columns: {sorted(unknown)}")
-    _check_stats_group_by(stats_group_by, columns)
+    _check_encode_args(columns, codecs, stats_group_by)
     select_cols = list(columns) + ([key] if key not in columns else [])
 
     def fn(batches):
@@ -862,10 +872,7 @@ def encode_table_bucketed(
     measured 10x slower at small scale from filesystem metadata alone)."""
     columns = columns or df.columns
     codecs = codecs or {}
-    unknown = set(codecs) - set(columns)
-    if unknown:
-        raise ValueError(f"codecs for unknown columns: {sorted(unknown)}")
-    _check_stats_group_by(stats_group_by, columns)
+    _check_encode_args(columns, codecs, stats_group_by)
     select_cols = list(columns) + ([key] if key not in columns else [])
     bucket_col = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).alias("__bucket")
 
@@ -936,35 +943,13 @@ def encode_table_bucketed(
     key_type = dict(df.dtypes).get(key)
     if scan is not None and key_type in ("string", "binary", "bigint"):
         from ..kernels.xxh64 import pmod as _pmod
-        from ..kernels.xxh64 import xxh64_bytes_bo, xxh64_int64
 
         def fn_with_bucket(batches):
             def gen():
                 for b in batches:
                     t = pa.Table.from_batches([b])
-                    karr = t[key].combine_chunks()
-                    nulls = None
-                    if karr.null_count:
-                        nulls = pc.is_null(karr).to_numpy(zero_copy_only=False)
-                        karr = pc.fill_null(
-                            karr,
-                            "" if pa.types.is_string(karr.type)
-                            or pa.types.is_large_string(karr.type)
-                            else b"" if pa.types.is_binary(karr.type)
-                            or pa.types.is_large_binary(karr.type)
-                            else 0,
-                        )
-                    if pa.types.is_integer(karr.type):
-                        h = xxh64_int64(
-                            karr.cast(pa.int64()).to_numpy(zero_copy_only=False)
-                        )
-                    else:
-                        blob, offs = arrow_to_bo(karr)
-                        h = xxh64_bytes_bo(blob, offs)
-                    if nulls is not None:
-                        h[nulls] = 42  # xxhash64(NULL) = the seed, per Spark
-                    bucket = _pmod(h, n_buckets)
-                    t = t.append_column("__bucket", pa.array(bucket, pa.int64()))
+                    h = _spark_xxh64(t[key].combine_chunks())
+                    t = t.append_column("__bucket", pa.array(_pmod(h, n_buckets), pa.int64()))
                     yield from t.to_batches()
 
             yield from fn(gen())
@@ -1282,10 +1267,9 @@ def decode_table_colocated(
     if scan is not None:
         from .pyscan import _group_by_dir, _total_bytes
 
-        groups = _group_by_dir(scan[0])
-        if len(groups) < min(4, len(scan[0])) or _total_bytes(scan[0]) < (
-            4 << 20
-        ) * len(groups):
+        if too_few_dirs(scan[0]) or _total_bytes(scan[0]) < (4 << 20) * len(
+            _group_by_dir(scan[0])
+        ):
             scan = None
     if check_layout and scan is None:
         split = (
@@ -1735,8 +1719,10 @@ def _agg_decode_path(enc: DataFrame) -> DataFrame:
                 names=[f.name for f in _AGG_SCHEMA.fields],
             )
 
+    # one pyscan task per directory: a store whose files share few
+    # directories would serialize into one task — JVM scan instead
     scan = parquet_scan_info(enc)
-    if scan is not None:
+    if scan is not None and not too_few_dirs(scan[0]):
         partials = pyscan_map_in_arrow(
             enc.sparkSession, scan, fn, _AGG_SCHEMA,
             columns=["chunk_id", "column", "dtype", "codec", "payload",

@@ -117,6 +117,13 @@ def _total_bytes(paths: list[str]) -> int:
     return total
 
 
+def too_few_dirs(paths: list[str]) -> bool:
+    """True when a one-task-per-directory scan would serialize: the files
+    sit in fewer than ``min(4, n_files)`` directories (e.g. a store written
+    without ``partitionBy``)."""
+    return len({os.path.dirname(p) for p in paths}) < min(4, len(paths))
+
+
 def _group_by_dir(paths: list[str]) -> list[list]:
     groups: dict[str, list] = {}
     for p in paths:

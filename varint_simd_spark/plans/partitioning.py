@@ -84,16 +84,10 @@ def encode_table_salted(
 ):
     """encode_table with host-locality + hot-host salting (the production
     path for the web_pages table)."""
-    from ..operators.encode import ENCODED_SCHEMA, make_encode_chunk_fn
+    from ..operators.encode import encode_chunks
 
-    columns = columns or df.columns
     df2 = salted_chunk_column(df, n_chunks, url_col, target_rows_per_chunk)
-    fn = make_encode_chunk_fn(columns, codecs or {}, url_col)
-    return (
-        df2.select(*columns, "__chunk")
-        .groupBy("__chunk")
-        .applyInArrow(fn, schema=ENCODED_SCHEMA)
-    )
+    return encode_chunks(df2, columns or df.columns, codecs, url_col)
 
 
 def skew_report(df: DataFrame, url_col: str = "url", top_k: int = 20) -> DataFrame:

@@ -25,6 +25,7 @@ from __future__ import annotations
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,6 +46,11 @@ def iceberg_runtime_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
+
+
+_LINEAGE = pa.schema(
+    [(c, pa.int64()) for c in ("chunk_id", "n_values", "raw_bytes", "enc_bytes", "n_columns")]
+)
 
 
 class EncodedStore:
@@ -69,8 +75,8 @@ class EncodedStore:
 
     # -- manifest -----------------------------------------------------------
 
-    def committed_chunks(self) -> DataFrame:
-        """Distinct committed chunk ids (empty DataFrame on first run).
+    def _manifest_or_none(self) -> DataFrame | None:
+        """The manifest, or None when nothing was ever committed.
 
         Only a missing manifest path reads as "nothing committed"; any
         other failure (corrupt/unreadable manifest) raises — silently
@@ -78,12 +84,18 @@ class EncodedStore:
         from pyspark.errors import AnalysisException
 
         try:
-            m = self.spark.read.parquet(self.manifest_path)
+            return self.spark.read.parquet(self.manifest_path)
         except AnalysisException as e:
             msg = str(e)
             if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return self.spark.createDataFrame([], "chunk_id long")
+                return None
             raise
+
+    def committed_chunks(self) -> DataFrame:
+        """Distinct committed chunk ids (empty DataFrame on first run)."""
+        m = self._manifest_or_none()
+        if m is None:
+            return self.spark.createDataFrame([], "chunk_id long")
         return m.select("chunk_id").distinct()
 
     def manifest(self) -> DataFrame:
@@ -92,15 +104,27 @@ class EncodedStore:
     # -- commit -------------------------------------------------------------
 
     def commit(self, enc: DataFrame, expected_chunks: list[int] | None = None) -> str:
-        """Write encoded chunks, then commit them to the manifest.
+        """Write encoded chunks, then commit them to the manifest: one
+        partitioned data write and one manifest append.
 
         Data files first (dynamic overwrite of touched chunk partitions),
         manifest append second — a crash in between leaves orphan data
         files that the next resume simply overwrites.
 
-        ``expected_chunks``: chunk ids this run planned; ids that produced
-        NO rows (empty chunks) still get a zero-row manifest entry so
-        resume does not re-plan them forever."""
+        No ``repartition("chunk_id")`` before the write: every encode
+        operator already emits all rows of a chunk from one task (a
+        ``groupBy`` per chunk, or one per-split flush), so each task writes
+        one file per chunk directory, and a re-shuffle would only move every
+        encoded byte a second time.
+
+        Lineage sums (rows, raw/encoded bytes, column count per chunk) come
+        from the cached rows this commit just wrote, never from a re-read of
+        the store.  ``expected_chunks``: chunk ids this run planned; the
+        driver sums an Arrow collect of the four size columns (no exchange),
+        writes one manifest row per planned id, and gives ids that produced
+        NO rows (empty chunks) a zero row, so resume does not re-plan them
+        forever.  Without it the chunk count is unbounded, and a
+        distributed ``groupBy`` over the cached rows does the rollup."""
         snapshot_id = uuid.uuid4().hex[:16]
         # Persist so the encode computes ONCE: the write below materializes
         # the cache and the lineage rollup reads it back — no re-encode and,
@@ -121,25 +145,30 @@ class EncodedStore:
                     w.partitionedBy(F.col("chunk_id")).create()
             else:
                 (
-                    enc.repartition("chunk_id")
-                    .write.mode("overwrite")
+                    enc.write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("chunk_id")
                     .parquet(self.enc_path)
                 )
-            lineage = enc.groupBy("chunk_id").agg(
-                F.sum("n_values").alias("n_values"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("enc_bytes").alias("enc_bytes"),
-                F.count("*").alias("n_columns"),
-            )
-            if expected_chunks is not None:
-                planned = self.spark.createDataFrame(
-                    [(int(c),) for c in expected_chunks], "chunk_id long"
+            sizes = enc.select("chunk_id", "n_values", "raw_bytes", "enc_bytes")
+            if expected_chunks is None:
+                lineage = sizes.groupBy("chunk_id").agg(
+                    F.sum("n_values").alias("n_values"),
+                    F.sum("raw_bytes").alias("raw_bytes"),
+                    F.sum("enc_bytes").alias("enc_bytes"),
+                    F.count("*").alias("n_columns"),
                 )
-                lineage = planned.join(lineage, "chunk_id", "left").fillna(
-                    0, subset=["n_values", "raw_bytes", "enc_bytes", "n_columns"]
-                )
+            else:
+                t = sizes.toArrow().group_by("chunk_id").aggregate(
+                    [("n_values", "sum"), ("raw_bytes", "sum"), ("enc_bytes", "sum"),
+                     ("chunk_id", "count")]
+                ).select(["chunk_id", "n_values_sum", "raw_bytes_sum", "enc_bytes_sum",
+                          "chunk_id_count"])
+                sums = {row[0]: row for row in zip(*t.to_pydict().values())}
+                rows = [sums.get(c, (c, 0, 0, 0, 0)) for c in map(int, expected_chunks)]
+                lineage = self.spark.createDataFrame(pa.Table.from_pylist(
+                    [dict(zip(_LINEAGE.names, r)) for r in rows], schema=_LINEAGE
+                ))
             lineage = lineage.withColumn("snapshot_id", F.lit(snapshot_id)).withColumn(
                 "committed_at", F.lit(time.time())
             )
@@ -268,53 +297,50 @@ def encode_resumable(
     """Encode only the chunks not yet committed; returns (snapshot_id or
     None if nothing to do, number of chunks encoded this run).
 
-    The planned chunk universe is 0..n_chunks-1; the pending set is the
-    DataFrame anti-join of that range against the manifest, and the
-    big-side row filter is a BROADCAST SEMI-JOIN against it — no
-    driver-side id list in the plan, so the path holds at millions of
-    chunks (an ``isin`` literal of the pending ids would not).  Only the
-    commit's expected-chunk bookkeeping collects ids, and only while the
-    pending set is small enough to enumerate."""
-    spark = df.sparkSession
-    universe = spark.range(n_chunks).select(F.col("id").alias("chunk_id"))
+    The planned chunk universe is 0..n_chunks-1, encoded in one
+    ``groupBy(__chunk)`` pass (``salted``: the chunking of
+    :func:`~varint_simd_spark.plans.partitioning.encode_table_salted`) and
+    committed by :meth:`EncodedStore.commit`.
+
+    First commit (no manifest yet): every planned chunk is pending, so the
+    encode runs unfiltered — no anti-join, count or semi-join that would
+    filter nothing.  Resume: the pending set is the anti-join of the
+    universe against the manifest, and the big-side row filter is a
+    BROADCAST SEMI-JOIN against it — no id list in the plan, so the path
+    holds at millions of chunks.  The commit's empty-chunk bookkeeping
+    enumerates pending ids on the driver only up to 100k of them."""
+    from ..operators.encode import encode_chunks
+    from ..plans.partitioning import salted_chunk_column
+
+    if salted:
+        df2 = salted_chunk_column(df, n_chunks, key, target_rows_per_chunk)
+    else:
+        df2 = df.withColumn("__chunk", F.pmod(F.xxhash64(F.col(key)), F.lit(n_chunks)))
+    manifest = store._manifest_or_none()
+    if manifest is None:
+        pending = list(range(n_chunks)) if n_chunks <= 100_000 else None
+        enc = encode_chunks(df2, df.columns, codecs, key)
+        return store.commit(enc, expected_chunks=pending), n_chunks
+
+    universe = store.spark.range(n_chunks).select(F.col("id").alias("chunk_id"))
     # persist: one manifest scan + anti-join feeds the count, the
     # bookkeeping collect, AND the semi-join below (also pins one
     # consistent pending snapshot against concurrent committers)
-    pending_df = universe.join(store.committed_chunks(), "chunk_id", "left_anti").persist()
+    committed = manifest.select("chunk_id").distinct()
+    pending_df = universe.join(committed, "chunk_id", "left_anti").persist()
     try:
         n_pending = pending_df.count()
         if n_pending == 0:
             return None, 0
-        # expected-chunks manifest bookkeeping (zero-row entries for empty
-        # chunks): a driver list is metadata, not a plan element — enumerate
-        # it only while small; past that, empty-chunk re-planning is the
-        # lesser cost and the semi-join below stays fully distributed
         pending = (
             [r["chunk_id"] for r in pending_df.collect()] if n_pending <= 100_000 else None
         )
-
-        if salted:
-            from ..plans.partitioning import salted_chunk_column
-
-            df2 = salted_chunk_column(df, n_chunks, key, target_rows_per_chunk)
-        else:
-            df2 = df.withColumn("__chunk", F.pmod(F.xxhash64(F.col(key)), F.lit(n_chunks)))
-
-        from ..operators.encode import ENCODED_SCHEMA, make_encode_chunk_fn
-
-        columns = df.columns
-        fn = make_encode_chunk_fn(columns, codecs or {}, key)
-        enc = (
-            df2.select(*columns, "__chunk")
-            .join(
-                F.broadcast(pending_df.select(F.col("chunk_id").alias("__chunk"))),
-                "__chunk",
-                "left_semi",
-            )
-            .groupBy("__chunk")
-            .applyInArrow(fn, schema=ENCODED_SCHEMA)
+        df2 = df2.join(
+            F.broadcast(pending_df.select(F.col("chunk_id").alias("__chunk"))),
+            "__chunk",
+            "left_semi",
         )
-        snapshot_id = store.commit(enc, expected_chunks=pending)
-        return snapshot_id, int(n_pending)
+        enc = encode_chunks(df2, df.columns, codecs, key)
+        return store.commit(enc, expected_chunks=pending), int(n_pending)
     finally:
         pending_df.unpersist()

@@ -102,17 +102,13 @@ def encode_stream(
     The value is locked to the store on first use (fail-fast on mismatch —
     a different value would re-key a crashed batch's replay)."""
 
-    from ..operators.encode import (
-        ENCODED_SCHEMA,
-        _check_stats_group_by,
-        make_encode_chunk_fn,
-    )
+    from ..operators.encode import _check_encode_args, encode_chunks
 
     _check_stream_conf(store, n_chunks)
     # same driver-side validation every batch encode entry point runs — a
     # typo'd group column must fail here, not as an executor-side KeyError
     # inside the first micro-batch
-    _check_stats_group_by(stats_group_by, [f.name for f in schema.fields])
+    _check_encode_args([f.name for f in schema.fields], codecs, stats_group_by)
 
     def process_batch(batch_df, batch_id: int):
         if batch_df.isEmpty():
@@ -128,7 +124,6 @@ def encode_stream(
         if not pending:
             return  # full replay of an already-committed batch
         columns = [f.name for f in schema.fields]
-        fn = make_encode_chunk_fn(columns, codecs or {}, key, stats_group_by)
         # slot (0..n_chunks-1) by url-hash, then map slot -> hashed chunk id
         slot = F.pmod(F.xxhash64(F.col(key)), F.lit(n_chunks))
         id_map = F.map_from_arrays(
@@ -136,11 +131,8 @@ def encode_stream(
             F.array(*[F.lit(cid) for cid in slot_ids]),
         )
         df2 = batch_df.withColumn("__chunk", F.element_at(id_map, slot.cast("int")))
-        enc = (
-            df2.select(*columns, "__chunk")
-            .filter(F.col("__chunk").isin(pending))
-            .groupBy("__chunk")
-            .applyInArrow(fn, schema=ENCODED_SCHEMA)
+        enc = encode_chunks(
+            df2.filter(F.col("__chunk").isin(pending)), columns, codecs, key, stats_group_by
         )
         store.commit(enc, expected_chunks=pending)
 
