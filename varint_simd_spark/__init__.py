@@ -16,4 +16,8 @@ Layout:
     plans/      partitioning & skew planning (url-hash bucketing, salting)
 """
 
+from ._worker import setup_worker
+
 __version__ = "0.1.0"
+
+setup_worker()

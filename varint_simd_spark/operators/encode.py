@@ -30,6 +30,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..codecs.base import (
     STR_TAGS,
@@ -1099,21 +1100,23 @@ def _apply_where(decoded: dict, conds: list[tuple]):
     return mask
 
 
-def decode_table(
-    enc: DataFrame,
-    meta: list | None = None,
-    columns: list[str] | None = None,
-    where: list[tuple] | None = None,
-) -> DataFrame:
-    """Inverse of :func:`encode_table`: encoded chunks -> original rows.
+def _spark_arrow_type(tag: str) -> pa.DataType:
+    """Spark-facing arrow type of a dtype tag: 32-bit-offset string/binary,
+    UTC timestamps."""
+    if tag == "str":
+        return pa.string()
+    if tag == "bin":
+        return pa.binary()
+    if tag == "ts_us":
+        return pa.timestamp("us", tz="UTC")
+    return tag_to_arrow(tag)
 
-    Self-describing (schema from the dtype tags); one groupBy on chunk_id.
-    ``meta``: precomputed :func:`column_meta` (skips the planning job).
-    ``columns``: decode only this subset (projection pushdown — pruned
-    columns' payloads are never read, decoded, or shipped over Arrow).
-    ``where``: filter pushdown — same three-tier semantics as
-    :func:`decode_table_colocated` (zone-map chunk skip, predicate-first
-    decode, in-UDF row filter)."""
+
+def _decode_plan(enc: DataFrame, meta: list | None, columns: list[str] | None, where):
+    """Planning shared by the decode operators: the pruned input, the
+    normalized predicates, every column to decode (``columns`` plus
+    predicate-only ones), their tags, the output columns, the predicate
+    columns and the Spark and Arrow output schemas."""
     conds = _normalize_where(where)
     out_columns = columns
     if columns is not None and conds:
@@ -1133,19 +1136,29 @@ def decode_table(
         [T.StructField("__chunk", T.LongType())]
         + [T.StructField(c, _TAG_TO_SPARK[tags[c]]) for c in out_cols]
     )
-    # Spark-facing arrow types: 32-bit-offset string/binary, UTC timestamps
-    def spark_arrow_type(tag: str) -> pa.DataType:
-        if tag == "str":
-            return pa.string()
-        if tag == "bin":
-            return pa.binary()
-        if tag == "ts_us":
-            return pa.timestamp("us", tz="UTC")
-        return tag_to_arrow(tag)
-
     arrow_out = pa.schema(
-        [("__chunk", pa.int64())]
-        + [(c, spark_arrow_type(tags[c])) for c in out_cols]
+        [("__chunk", pa.int64())] + [(c, _spark_arrow_type(tags[c])) for c in out_cols]
+    )
+    return enc, conds, columns, tags, out_cols, pred_cols, out_schema, arrow_out
+
+
+def decode_table(
+    enc: DataFrame,
+    meta: list | None = None,
+    columns: list[str] | None = None,
+    where: list[tuple] | None = None,
+) -> DataFrame:
+    """Inverse of :func:`encode_table`: encoded chunks -> original rows.
+
+    Self-describing (schema from the dtype tags); one groupBy on chunk_id.
+    ``meta``: precomputed :func:`column_meta` (skips the planning job).
+    ``columns``: decode only this subset (projection pushdown — pruned
+    columns' payloads are never read, decoded, or shipped over Arrow).
+    ``where``: filter pushdown — same three-tier semantics as
+    :func:`decode_table_colocated` (zone-map chunk skip, predicate-first
+    decode, in-UDF row filter)."""
+    enc, conds, columns, tags, out_cols, pred_cols, out_schema, arrow_out = (
+        _decode_plan(enc, meta, columns, where)
     )
 
     def decode_chunk(table: pa.Table) -> pa.Table:
@@ -1246,11 +1259,6 @@ def decode_table_colocated(
 
     Predicate columns need not be in ``columns``; they are decoded for
     the mask and dropped from the output."""
-    conds = _normalize_where(where)
-    out_columns = columns
-    if columns is not None and conds:
-        pred_only = [c for c, _, _ in conds if c not in columns]
-        columns = list(columns) + sorted(set(pred_only))
     # python-side scan fast path (pyscan.py): a bare parquet store scan is
     # executed inside the Python task (pyarrow reader, one task per
     # partition directory), skipping both the JVM row->Arrow transpose and
@@ -1263,7 +1271,7 @@ def decode_table_colocated(
     #   the transpose saving below ~4 MB per directory group;
     # * a store whose files all share one directory would serialize into a
     #   single task — JVM scan.
-    scan = parquet_scan_info(enc) if out_columns is None else None
+    scan = parquet_scan_info(enc) if columns is None else None
     if scan is not None:
         from .pyscan import _group_by_dir, _total_bytes
 
@@ -1287,33 +1295,9 @@ def decode_table_colocated(
                 "encoded table is not chunk-colocated (a chunk spans scan "
                 "partitions); falling back to the one-shuffle decode_table()"
             )
-            return decode_table(enc, meta, out_columns, where=where)
-    if meta is None:
-        meta = column_meta(enc)
-    enc, meta = _prune(enc, meta, columns)
-    columns = [r["column"] for r in meta]
-    tags = {r["column"]: r["dtype"] for r in meta}
-    out_cols = [c for c in columns if out_columns is None or c in set(out_columns)]
-    pred_cols = list(dict.fromkeys(c for c, _, _ in conds))
-    unknown_pred = set(pred_cols) - set(columns)
-    if unknown_pred:
-        raise ValueError(f"where references unknown columns: {sorted(unknown_pred)}")
-
-    def spark_arrow_type(tag: str) -> pa.DataType:
-        if tag == "str":
-            return pa.string()
-        if tag == "bin":
-            return pa.binary()
-        if tag == "ts_us":
-            return pa.timestamp("us", tz="UTC")
-        return tag_to_arrow(tag)
-
-    out_schema = T.StructType(
-        [T.StructField("__chunk", T.LongType())]
-        + [T.StructField(c, _TAG_TO_SPARK[tags[c]]) for c in out_cols]
-    )
-    arrow_out = pa.schema(
-        [("__chunk", pa.int64())] + [(c, spark_arrow_type(tags[c])) for c in out_cols]
+            return decode_table(enc, meta, columns, where=where)
+    enc, conds, columns, tags, out_cols, pred_cols, out_schema, arrow_out = (
+        _decode_plan(enc, meta, columns, where)
     )
 
     def fn(batches):
@@ -1638,86 +1622,31 @@ def _agg_decode_path(enc: DataFrame) -> DataFrame:
     Chunks whose (dtype, codec) admits it are aggregated straight from the
     payload structure (:func:`_agg_row_analytic`) without materializing
     the decoded column at all."""
+    arrow_schema = to_arrow_schema(_AGG_SCHEMA)
 
     def fn(batches):
         for batch in batches:
-            out = {k.name: [] for k in _AGG_SCHEMA.fields}
+            rows = []
             tags = batch.column("dtype")  # mapInArrow always feeds RecordBatches
             for i, (name, codec, payload, params, _crc, _cid, nv) in enumerate(
                 _iter_enc_rows(batch)
             ):
-                tag = tags[i].as_py()
-                got = _agg_row_analytic(tag, codec, payload, json.loads(params), nv)
-                if got is not None:
-                    out["column"].append(name)
-                    out["n_rows"].append(int(nv))
-                    out["n_nulls"].append(got[0])
-                    out["sum_exact"].append(got[1])
-                    out["min_exact"].append(got[2])
-                    out["max_exact"].append(got[3])
-                    out["sum_bytes"].append(got[4])
-                    continue
-                arr = decode_column_arrow(
-                    tag, codec, payload, json.loads(params), nv
-                )
-                n_nulls = arr.null_count
-                sum_exact = None
-                min_exact = None
-                max_exact = None
-                sum_bytes = None
-                t = arr.type
-                if pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_binary(t) or pa.types.is_large_binary(t):
-                    sum_bytes = int(pc.sum(pc.binary_length(arr)).as_py() or 0)
-                elif pa.types.is_floating(t):
-                    pass  # fp sums are order-dependent; not exposed exactly
-                else:
-                    if pa.types.is_timestamp(t):
-                        v = arr.cast(pa.int64())
-                    elif pa.types.is_date(t):
-                        v = arr.cast(pa.int32()).cast(pa.int64())
-                    elif pa.types.is_boolean(t):
-                        v = arr.cast(pa.int64())
-                    else:
-                        v = arr.cast(pa.int64())
-                    # Arrow sums in an int64 accumulator, which WRAPS for
-                    # realistic inputs (e.g. 400k epoch-micros ≈ 7e20).
-                    # Exact fast path: shift by the chunk min so the Arrow
-                    # sum runs over the (small) in-chunk range, then add
-                    # n*min back with Python-int arithmetic — epoch-micros
-                    # chunks stay vectorized instead of object-summing
-                    mm = pc.min_max(v)
-                    lo_, hi_ = mm["min"].as_py(), mm["max"].as_py()
-                    min_exact = str(lo_) if lo_ is not None else None
-                    max_exact = str(hi_) if hi_ is not None else None
-                    n_nonnull = int(nv) - int(n_nulls)
-                    if lo_ is None:
-                        sum_exact = "0"
-                    elif (hi_ - lo_) * max(n_nonnull, 1) < (1 << 62):
-                        shifted = pc.subtract(v, pa.scalar(lo_, pa.int64()))
-                        s = int(pc.sum(shifted, min_count=0).as_py() or 0)
-                        sum_exact = str(s + lo_ * n_nonnull)
-                    else:
-                        vv = v.drop_null().to_numpy(zero_copy_only=False)
-                        sum_exact = str(int(vv.astype(object).sum()) if vv.size else 0)
-                out["column"].append(name)
-                out["n_rows"].append(int(nv))
-                out["n_nulls"].append(int(n_nulls))
-                out["sum_exact"].append(sum_exact)
-                out["min_exact"].append(min_exact)
-                out["max_exact"].append(max_exact)
-                out["sum_bytes"].append(sum_bytes)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["column"], type=pa.string()),
-                    pa.array(out["n_rows"], type=pa.int64()),
-                    pa.array(out["n_nulls"], type=pa.int64()),
-                    pa.array(out["sum_exact"], type=pa.string()),
-                    pa.array(out["min_exact"], type=pa.string()),
-                    pa.array(out["max_exact"], type=pa.string()),
-                    pa.array(out["sum_bytes"], type=pa.int64()),
-                ],
-                names=[f.name for f in _AGG_SCHEMA.fields],
-            )
+                tag, params = tags[i].as_py(), json.loads(params)
+                got = _agg_row_analytic(tag, codec, payload, params, nv)
+                if got is None:
+                    arr = decode_column_arrow(tag, codec, payload, params, nv)
+                    total = lo = hi = n_bytes = None
+                    if tag in STR_TAGS:
+                        n_bytes = int(pc.sum(pc.binary_length(arr)).as_py() or 0)
+                    elif tag != "f64":  # fp sums are order-dependent
+                        v = _to_int64_keep_nulls(arr, tag)
+                        mm = pc.min_max(v)
+                        lo, hi = mm["min"].as_py(), mm["max"].as_py()
+                        total = str(_exact_int_sum(v, lo, hi))
+                    got = (arr.null_count, total, None if lo is None else str(lo),
+                           None if hi is None else str(hi), n_bytes)
+                rows.append(dict(zip(_AGG_SCHEMA.names, (name, int(nv)) + got)))
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     # one pyscan task per directory: a store whose files share few
     # directories would serialize into one task — JVM scan instead
@@ -1829,6 +1758,19 @@ def _degroup_null_key(df: DataFrame) -> DataFrame:
     )
 
 
+def _local_frame(spark, rows: list, schema: T.StructType) -> DataFrame:
+    """A driver-side result shipped to the JVM as one Arrow table; a list of
+    rows would be pickled through Python tasks."""
+    rows = [dict(zip(schema.names, r)) for r in rows]
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)))
+
+
+def _sort_small(df: DataFrame) -> DataFrame:
+    """Order a result of at most one row per column: one partition sorted in
+    place, where ``orderBy`` adds a sampling job and an exchange."""
+    return df.coalesce(1).sortWithinPartitions("column")
+
+
 def decode_aggregate(
     enc: DataFrame,
     columns: list[str] | None = None,
@@ -1914,8 +1856,7 @@ def decode_aggregate(
             # pure scheduling for 13 rows)
             key=lambda t: (t[0] is not None, t[0] or "", t[1]),
         )
-        spark = enc.sparkSession
-        good_df = spark.createDataFrame(good_rows, schema=_GAGG_SCHEMA)
+        good_df = _local_frame(enc.sparkSession, good_rows, _GAGG_SCHEMA)
         if bad:
             fb = _degroup_null_key(
                 _agg_decode_path_grouped(enc, group_by, bad)
@@ -1924,7 +1865,7 @@ def decode_aggregate(
         return good_df
 
     if not use_stats:
-        return _agg_decode_path(enc).orderBy("column")
+        return _sort_small(_agg_decode_path(enc))
 
     rows = _stats_aggregate(enc).collect()  # the ONE metadata job
     bad = sorted(r["column"] for r in rows if r["__ok"] != 1)
@@ -1934,12 +1875,11 @@ def decode_aggregate(
     good_rows = sorted(
         (tuple(r)[:-1] for r in rows if r["__ok"] == 1), key=lambda t: t[0]
     )
-    spark = enc.sparkSession
-    good_df = spark.createDataFrame(good_rows, schema=_AGG_SCHEMA)
+    good_df = _local_frame(enc.sparkSession, good_rows, _AGG_SCHEMA)
     if bad:
-        good_df = good_df.unionByName(
+        good_df = _sort_small(good_df.unionByName(
             _agg_decode_path(enc.filter(F.col("column").isin(bad)))
-        ).orderBy("column")
+        ))
     return good_df
 
 
